@@ -50,7 +50,9 @@ def main() -> None:
 
     from spatialflink_spark.config import DEFAULT_CONFIG as C, GridConfig
     from spatialflink_spark.functions.windows import tumbling_start
-    from spatialflink_spark.operators.geomcollection import geomcollection_join
+    from spatialflink_spark.operators.geomcollection import GEOM_COLLECTION
+    from spatialflink_spark.operators.join import windowed_join
+    from spatialflink_spark.operators.points import POINT
     from spatialflink_spark.session import get_spark
     from spatialflink_spark.sources.sequences import sequences
 
@@ -63,7 +65,13 @@ def main() -> None:
         seq_ws = sequences(spark, sf_dir).withColumn(
             "ws", tumbling_start("ts_s", tumbling_s)
         )
-        return geomcollection_join(seq_ws, grid, C.join_radius)
+        # the geomcollection_join gate query, over a re-tuned window and grid
+        return windowed_join(
+            POINT.side(seq_ws, grid),
+            GEOM_COLLECTION.side(seq_ws, grid, C.join_radius),
+            C.join_radius,
+            GEOM_COLLECTION.dist("n_tok"),
+        )
 
     def run(sf_dir: str, tumbling_s: int, grid: GridConfig) -> tuple[float, int]:
         best = None

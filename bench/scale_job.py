@@ -101,8 +101,7 @@ def job_stream_ingest(spark, stage_dir: str, n_rows: int, cores: int) -> dict:
         VOCAB_SIZE,
     )
     from spatialflink_spark.functions import tokens as T
-    from spatialflink_spark.operators.cells import cell_expr
-    from spatialflink_spark.operators.range_query import query_cells_df
+    from spatialflink_spark.operators.range_query import range_query
 
     stream = (
         spark.readStream.schema(
@@ -127,15 +126,7 @@ def job_stream_ingest(spark, stage_dir: str, n_rows: int, cores: int) -> dict:
             f"aggregate(tokens, 0L, (a, t) -> (a*131 + t) % {VOCAB_SIZE})"
         ).alias("tok_sum"),
     )
-    qcells = query_cells_df(spark, C.grid, DEFAULT_QUERY_POINTS)
-    matched = (
-        seq.withColumn("cell", cell_expr(C.grid))
-        .join(F.broadcast(qcells), "cell")
-        .where(
-            F.col("guaranteed")
-            | (F.expr("abs(n_tok - q_n_tok)") <= F.col("radius"))
-        )
-    )
+    matched = range_query(seq, C.grid, DEFAULT_QUERY_POINTS)
     counted = matched.groupBy(
         F.window("event_ts", f"{C.tumbling_s} seconds"), "q_id"
     ).agg(F.count(F.lit(1)).alias("n_matches"), F.sum("tok_sum").alias("chk"))

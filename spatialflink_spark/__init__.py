@@ -5,13 +5,20 @@ reference repo marianaGarcez/SpatialFlink (GeoFlink + SNCB extension) over a
 table of pre-tokenized training sequences
 ``(doc_id string, tokens array<int>, n_tok int, source string, event_ts)``:
 
-- uniform-grid cell assignment        -> 1-D token-length grid (`operators.cells`)
+- uniform-grid cell assignment        -> 1-D token-length grid (`operators.cells`,
+  the one clamped cell-range helper `cell_range_sql`)
   (reference: spatialIndices/UniformGrid.java)
-- windowed range query                -> `operators.range_query`
+- geometry types, one spec each       -> `operators.geometry.GeometrySpec`;
+  `operators.points.POINT`, `operators.intervals.INTERVAL`,
+  `operators.linestrings.LINESTRING`, `operators.multiintervals.MULTI_INTERVAL`,
+  `operators.geomcollection.GEOM_COLLECTION`
+  (reference: spatialObjects/*.java, one query class per type combination)
+- covered-cell range, any type        -> `operators.range_query`
   (reference: spatialOperators/range/PointPointRangeQuery.java)
-- windowed kNN (two-stage top-k)      -> `operators.knn`
+- windowed kNN (two-stage top-k)      -> `operators.knn` (`knn_windowed`;
+  stage 2 `knn_merge`, shared with `streaming.pipeline.finalize_knn`)
   (reference: spatialOperators/knn/PointPointKNNQuery.java, KNNQuery.java)
-- windowed stream-stream spatial join -> `operators.join`
+- windowed spatial join, any type pair -> `operators.join.windowed_join`
   (reference: spatialOperators/join/PointPointJoinQuery.java,
    tJoin/PointPointTJoinQuery.java)
 - trajectory/stateful operators       -> `operators.stats`, `operators.aggregate`,

@@ -25,10 +25,6 @@ def tumbling_start(ts_col: str, size_s: int) -> Column:
     return F.expr(f"cast(floor({ts_col} / {size_s}) * {size_s} as bigint)")
 
 
-def duck_tumbling_start(ts_col: str, size_s: int) -> str:
-    return f"CAST(floor({ts_col} / {size_s}) * {size_s} AS BIGINT)"
-
-
 def with_sliding_windows(df: DataFrame, ts_col: str, size_s: int, slide_s: int) -> DataFrame:
     """Explode each row into every sliding window containing it, adding
     `ws` (BIGINT start). A row at time t belongs to windows with start in
@@ -51,19 +47,6 @@ def with_sliding_windows(df: DataFrame, ts_col: str, size_s: int, slide_s: int) 
         .where(F.expr(f"{ts_col} >= ws AND {ts_col} < ws + {size_s}"))
         .drop("_k")
     )
-
-
-def duck_sliding_windows_cte(src: str, ts_col: str, size_s: int, slide_s: int, cols: str) -> str:
-    """DuckDB relation mirroring with_sliding_windows: SELECT {cols}, ws."""
-    n = size_s // slide_s
-    return f"""
-  SELECT {cols},
-         CAST(floor({ts_col} / {slide_s}) * {slide_s} - k.k * {slide_s} AS BIGINT) AS ws
-  FROM {src}
-  CROSS JOIN (SELECT unnest(range(0, {n})) AS k) k
-  WHERE {ts_col} >= CAST(floor({ts_col} / {slide_s}) * {slide_s} - k.k * {slide_s} AS BIGINT)
-    AND {ts_col} <  CAST(floor({ts_col} / {slide_s}) * {slide_s} - k.k * {slide_s} AS BIGINT) + {size_s}
-"""
 
 
 def with_session_windows(

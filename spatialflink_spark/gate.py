@@ -25,8 +25,13 @@ from spatialflink_spark.functions.windows import (
 )
 from spatialflink_spark.operators import aggregate as agg_ops
 from spatialflink_spark.operators.cells import with_cell
+from spatialflink_spark.operators.geomcollection import GEOM_COLLECTION
+from spatialflink_spark.operators.intervals import INTERVAL, interval_range_count
 from spatialflink_spark.operators.join import windowed_join
 from spatialflink_spark.operators.knn import knn_windowed
+from spatialflink_spark.operators.linestrings import LINESTRING
+from spatialflink_spark.operators.multiintervals import MULTI_INTERVAL
+from spatialflink_spark.operators.points import POINT
 from spatialflink_spark.operators.range_query import range_query
 from spatialflink_spark.operators.stats import running_stats
 from spatialflink_spark.sources.sequences import sequences_cached
@@ -82,9 +87,30 @@ def q_knn_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     return knn_windowed(_seq_s(spark, sf_dir), C.grid, DEFAULT_QUERY_POINTS)
 
 
+def _point_join(left: DataFrame, right: DataFrame, radius: int, self_join: bool) -> DataFrame:
+    """Point-point windowed join (PointPointJoinQuery.java:124-183), the left
+    stream replicated to its radius neighborhood.
+    Output: ws, left_doc, right_doc, left_seq, right_seq, dist, pair_ts."""
+
+    def side(df: DataFrame, expand: int, p: str):
+        return POINT.side(
+            df, C.grid, expand,
+            doc_id=f"{p}_doc", seq_no=f"{p}_seq", n_tok=f"{p}_n_tok", ts_s=f"{p}_ts",
+        )
+
+    return windowed_join(
+        side(left, radius, "left"),
+        side(right, 0, "right"),
+        radius,
+        "abs(left_n_tok - right_n_tok)",
+        emit=("left_seq", "right_seq", "dist"),
+        skip_self=self_join,
+    )
+
+
 def q_join_self_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     seq = _seq_t(spark, sf_dir)
-    return windowed_join(seq, seq, C.grid, C.join_radius, self_join=True)
+    return _point_join(seq, seq, C.join_radius, self_join=True)
 
 
 def q_variation_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -490,7 +516,7 @@ def q_trange_trajectories(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_join_two_streams(spark: SparkSession, sf_dir: str) -> DataFrame:
     left = _seq_t(spark, sf_dir)
     right = left.where(F.expr("doc_id % 10 = 0"))
-    return windowed_join(left, right, C.grid, radius=3, self_join=False)
+    return _point_join(left, right, radius=3, self_join=False)
 
 
 # ---- format deserialization + salted skew path ------------------------------
@@ -953,100 +979,133 @@ def q_stream_knn_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sink.read_committed(spark)
 
 
-# ---- interval (polygon-analog) type combos ----------------------------------
-
-from spatialflink_spark.operators import intervals as iv_ops  # noqa: E402
+# ---- interval / multi-interval / collection / linestring type combos -------
+# Every geometry-type combo is one of the three shared plans over the type's
+# spec (operators/geometry.py); only the distance of a join pair is
+# combo-specific.
 
 
 def q_interval_containment_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return iv_ops.interval_containment_join(_seq_t(spark, sf_dir), C.grid)
+    """Windowed point-in-interval join (PointPolygonJoinQuery shape, θ =
+    containment, i.e. interval distance 0), no id-skip.
+    Output: ws, doc_id, iv_id, n_tok, lo, hi, pair_ts."""
+    seq = _seq_t(spark, sf_dir)
+    return windowed_join(
+        POINT.side(seq, C.grid), INTERVAL.side(seq, C.grid), 0,
+        INTERVAL.dist("n_tok"), payload=("n_tok", "lo", "hi"), skip_self=False,
+    )
 
 
 def q_interval_range_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return iv_ops.interval_range_count(_seq_t(spark, sf_dir), q_n_tok=48)
+    return interval_range_count(_seq_t(spark, sf_dir), q_n_tok=48)
 
 
 def q_interval_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Polygon-Polygon windowed join type combo over the interval stream."""
-    return iv_ops.interval_interval_join(_seq_t(spark, sf_dir), C.grid, C.join_radius)
+    """Polygon-Polygon windowed join type combo over the interval stream:
+    1-D bbox-to-bbox distance, the left side replicated to its
+    radius-expanded span. Output: ws, left_iv, right_iv, l_lo, l_hi, r_lo,
+    r_hi, dist, pair_ts."""
+    seq, r = _seq_t(spark, sf_dir), C.join_radius
+
+    def side(expand: int, p: str, id_name: str):
+        return INTERVAL.side(
+            seq, C.grid, expand,
+            iv_id=id_name, iv_seq=f"{p}_seq", lo=f"{p}_lo", hi=f"{p}_hi", iv_ts=f"{p}_ts",
+        )
+
+    return windowed_join(
+        side(r, "l", "left_iv"), side(0, "r", "right_iv"), r,
+        "greatest(0, l_lo - r_hi, r_lo - l_hi)",
+        payload=("l_lo", "l_hi", "r_lo", "r_hi", "dist"),
+    )
 
 
 def q_interval_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Point-Polygon kNN type combo over the interval stream."""
-    return iv_ops.interval_knn(_seq_t(spark, sf_dir), C.grid, DEFAULT_QUERY_POINTS)
-
-
-# ---- multi-interval (multi-geometry) type combos -----------------------------
-
-from spatialflink_spark.operators import multiintervals as mi_ops  # noqa: E402
+    return knn_windowed(_seq_t(spark, sf_dir), C.grid, DEFAULT_QUERY_POINTS, INTERVAL)
 
 
 def q_multiinterval_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Point-query range over the multi-interval (multi-geometry) stream."""
-    return mi_ops.multiinterval_range(
-        _seq_t(spark, sf_dir), C.grid, DEFAULT_QUERY_POINTS
+    return range_query(
+        _seq_t(spark, sf_dir), C.grid, DEFAULT_QUERY_POINTS, MULTI_INTERVAL
     )
 
 
 def q_multiinterval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Windowed point-multiinterval join (Point-MultiPolygon combo)."""
-    return mi_ops.multiinterval_join(_seq_t(spark, sf_dir), C.grid, C.join_radius)
+    """Windowed point-multiinterval join (Point-MultiPolygon combo), objects
+    replicated to their radius-expanded spans."""
+    seq = _seq_t(spark, sf_dir)
+    return windowed_join(
+        POINT.side(seq, C.grid), MULTI_INTERVAL.side(seq, C.grid, C.join_radius),
+        C.join_radius, MULTI_INTERVAL.dist("n_tok"),
+    )
 
 
-# ---- geometry collection (heterogeneous mixed-type parts) --------------------
-
-from spatialflink_spark.operators import geomcollection as gc_ops  # noqa: E402
+def q_multiinterval_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Point-MultiPolygon kNN combo over the multi-interval stream."""
+    return knn_windowed(
+        _seq_t(spark, sf_dir), C.grid, DEFAULT_QUERY_POINTS, MULTI_INTERVAL
+    )
 
 
 def q_geomcollection_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Point-query range over the mixed-part collection stream
     (GeometryCollection analog, Deserialization.java:1208-1241): distance =
     min over point/interval/linestring part distances."""
-    return gc_ops.geomcollection_range(
-        _seq_t(spark, sf_dir), C.grid, DEFAULT_QUERY_POINTS
+    return range_query(
+        _seq_t(spark, sf_dir), C.grid, DEFAULT_QUERY_POINTS, GEOM_COLLECTION
     )
 
 
 def q_geomcollection_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Windowed point-collection join over mixed-type parts."""
-    return gc_ops.geomcollection_join(_seq_t(spark, sf_dir), C.grid, C.join_radius)
+    seq = _seq_t(spark, sf_dir)
+    return windowed_join(
+        POINT.side(seq, C.grid), GEOM_COLLECTION.side(seq, C.grid, C.join_radius),
+        C.join_radius, GEOM_COLLECTION.dist("n_tok"),
+    )
 
 
 def q_geomcollection_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Point-collection kNN over mixed-type parts (two-stage top-k)."""
-    return gc_ops.geomcollection_knn(
-        _seq_t(spark, sf_dir), C.grid, DEFAULT_QUERY_POINTS
+    return knn_windowed(
+        _seq_t(spark, sf_dir), C.grid, DEFAULT_QUERY_POINTS, GEOM_COLLECTION
     )
-
-
-def q_multiinterval_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Point-MultiPolygon kNN combo over the multi-interval stream."""
-    return mi_ops.multiinterval_knn(_seq_t(spark, sf_dir), C.grid, DEFAULT_QUERY_POINTS)
-
-
-# ---- linestring (vertex-set polyline) type combos ---------------------------
-
-from spatialflink_spark.operators import linestrings as ls_ops  # noqa: E402
 
 
 def q_linestring_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Point-query range over the LineString (vertex-set) stream."""
-    return ls_ops.linestring_range(_seq_t(spark, sf_dir), C.grid, DEFAULT_QUERY_POINTS)
+    return range_query(_seq_t(spark, sf_dir), C.grid, DEFAULT_QUERY_POINTS, LINESTRING)
 
 
 def q_linestring_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Point-LineString kNN type combo."""
-    return ls_ops.linestring_knn(_seq_t(spark, sf_dir), C.grid, DEFAULT_QUERY_POINTS)
+    return knn_windowed(_seq_t(spark, sf_dir), C.grid, DEFAULT_QUERY_POINTS, LINESTRING)
 
 
 def q_point_linestring_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Windowed point-linestring join type combo."""
-    return ls_ops.point_linestring_join(_seq_t(spark, sf_dir), C.grid, C.join_radius)
+    """Windowed point-linestring join type combo: points replicated to their
+    radius neighborhood, linestrings to their bbox cells."""
+    seq = _seq_t(spark, sf_dir)
+    return windowed_join(
+        POINT.side(seq, C.grid, C.join_radius), LINESTRING.side(seq, C.grid),
+        C.join_radius, LINESTRING.dist("n_tok"),
+    )
 
 
 def q_interval_linestring_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Polygon-LineString join type combo (completes the 3x3 matrix)."""
-    return ls_ops.interval_linestring_join(_seq_t(spark, sf_dir), C.grid, C.join_radius)
+    """Polygon-LineString join type combo (completes the 3x3 matrix):
+    distance = min over the polyline's vertices of the interval distance;
+    intervals replicated to their radius-expanded span, linestrings to
+    their bbox cells. Output: ws, iv_id, ls_id, lo, hi, dist, pair_ts."""
+    seq = _seq_t(spark, sf_dir)
+    return windowed_join(
+        INTERVAL.side(seq, C.grid, C.join_radius), LINESTRING.side(seq, C.grid),
+        C.join_radius,
+        f"array_min(transform(tokens, t -> {INTERVAL.dist('t')}))",
+        payload=("lo", "hi", "dist"),
+    )
 
 
 def q_knn_unbounded(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -81,16 +81,6 @@ def trajectory(df_ws: DataFrame, key: str = "doc_id") -> DataFrame:
     )
 
 
-def traj_speed(df_ws: DataFrame, key: str = "doc_id") -> DataFrame:
-    """TrajSpeedAgg analog (sncb/ops/TrajSpeedAgg.java:9-45): trajectory plus
-    running avg & min of the value column (n_tok as the speed stand-in)."""
-    return df_ws.groupBy(key, "ws").agg(
-        F.count(F.lit(1)).alias("n_points"),
-        F.expr("round(avg(n_tok), 6)").alias("avg_val"),
-        F.min("n_tok").alias("min_val"),
-    )
-
-
 def heatmap(df_ws_cell: DataFrame) -> DataFrame:
     """TAggregate WB(TIME) analog (TAggregateQuery.java:498-614): per
     (cell, window), per-doc trajectory length (maxTs - minTs), then the cell

@@ -28,12 +28,29 @@ from pyspark.sql import functions as F
 from spatialflink_spark.config import GridConfig
 
 
-def cell_expr(grid: GridConfig, n_tok_col: str = "n_tok") -> Column:
-    """cell = clamp(floor(n_tok / cell_len), 0, num_cells-1) as INT."""
-    return F.expr(
-        f"cast(least(greatest(floor({n_tok_col} / {grid.cell_len}), 0), "
+def cell_sql(grid: GridConfig, x: str) -> str:
+    """SQL for the clamped cell of n_tok-axis value `x`:
+    clamp(floor(x / cell_len), 0, num_cells-1) as INT. Every cell assignment
+    and every replication range in the engine is built from this one
+    expression."""
+    return (
+        f"cast(least(greatest(floor(({x}) / {grid.cell_len}), 0), "
         f"{grid.num_cells - 1}) as int)"
     )
+
+
+def cell_range_sql(grid: GridConfig, lo: str, hi: str, expand: int = 0) -> str:
+    """array<int> of the cells covering [lo - expand, hi + expand], both ends
+    clamped — the covered-cell set (gridIDsSet, HelperClass.java:123-143) and
+    the radius-neighborhood replication of JoinQuery.java:73-90."""
+    if expand:
+        lo, hi = f"{lo} - {expand}", f"{hi} + {expand}"
+    return f"sequence({cell_sql(grid, lo)}, {cell_sql(grid, hi)})"
+
+
+def cell_expr(grid: GridConfig, n_tok_col: str = "n_tok") -> Column:
+    """cell = clamp(floor(n_tok / cell_len), 0, num_cells-1) as INT."""
+    return F.expr(cell_sql(grid, n_tok_col))
 
 
 def duck_cell_expr(grid: GridConfig, n_tok_col: str = "n_tok") -> str:

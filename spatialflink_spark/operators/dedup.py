@@ -37,16 +37,6 @@ ROWS_PER_BAND = N_HASHES // N_BANDS
 SHINGLE_K = 3
 
 
-def _shingle_hashes_expr(k: int = SHINGLE_K) -> str:
-    """array<bigint> of distinct shingle hashes (portable rolling hash)."""
-    sh = T.spark_word_shingles("text", k)
-    return (
-        f"array_distinct(transform({sh}, "
-        f"s -> aggregate(split(s, ''), cast(0 as bigint), "
-        f"(a, c) -> (a*31 + ascii(c)) % {HASH_MOD})))"
-    )
-
-
 def with_shingle_hashes(docs: DataFrame, k: int = SHINGLE_K) -> DataFrame:
     """(doc_id, _hs) staged through intermediate columns so the word split /
     shingle build / hash each evaluate ONCE per row (inlining the whole

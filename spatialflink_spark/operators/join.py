@@ -9,10 +9,11 @@ Trajectory join adds latest-per-pair dedup: keep the max-timestamp match per
 (traj1, traj2) (tJoin/PointPointTJoinQuery.java:133-177); the self-join
 variant skips p.objID == q.objID (:341-435).
 
-Token-domain re-expression: distance = |l.n_tok - r.n_tok|; "neighboring
-cells" of a row are the cells intersecting [n_tok - r, n_tok + r], computed
-with integer arithmetic and exploded (sequence()), keeping the join a pure
-(cell, ws) equi-join that Catalyst executes as SortMergeJoin (or
+Token-domain re-expression, one plan for every geometry-type pair: each
+side is a spec's stream (operators/geometry.py) exploded to its covered
+cells, one side widened by the radius ("neighboring cells" = the cells
+intersecting [lo - r, hi + r], integer arithmetic + sequence()), keeping the
+join a pure (cell, ws) equi-join that Catalyst executes as SortMergeJoin (or
 BroadcastHashJoin when one side is small — a strategy Catalyst picks from
 stats; at 100 TB both sides are big and SMJ on (cell, ws) with AQE skew
 splitting is the right plan).
@@ -20,81 +21,56 @@ splitting is the right plan).
 
 from __future__ import annotations
 
+from typing import Sequence
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from spatialflink_spark.config import GridConfig
-from spatialflink_spark.operators.cells import with_cell
-
-
-def _replicate_to_neighbor_cells(df: DataFrame, grid: GridConfig, radius: int) -> DataFrame:
-    """Explode each row to every cell its radius-ball intersects — the
-    query-stream replication of JoinQuery.java:73-90 (duplicate row per cell,
-    then pure equi-join)."""
-    lo = f"cast(least(greatest(floor((n_tok - {radius}) / {grid.cell_len}), 0), {grid.num_cells - 1}) as int)"
-    hi = f"cast(least(greatest(floor((n_tok + {radius}) / {grid.cell_len}), 0), {grid.num_cells - 1}) as int)"
-    return df.withColumn("cell", F.explode(F.expr(f"sequence({lo}, {hi})")))
+from spatialflink_spark.operators.geometry import Side
 
 
 def windowed_join(
-    left_ws: DataFrame,
-    right_ws: DataFrame,
-    grid: GridConfig,
+    left: Side,
+    right: Side,
     radius: int,
-    self_join: bool = False,
+    dist: str,
+    payload: Sequence[str] = ("dist",),
+    emit: Sequence[str] | None = None,
+    skip_self: bool = True,
 ) -> DataFrame:
-    """Pairs (l, r) in the same window with |l.n_tok - r.n_tok| <= radius,
-    deduped to the latest match per (window, l.doc, r.doc) pair.
+    """Pairs (l, r) in the same window whose θ distance `dist` (SQL over
+    both sides' columns) is <= radius, deduped to the latest match per
+    (window, l.id, r.id) pair.
 
-    Inputs must carry `ws` (window start) + canonical sequence columns.
-    Output: ws, left_doc, right_doc, left_seq, right_seq, dist, pair_ts.
+    `left`/`right` come from GeometrySpec.side; one of them is replicated
+    with expand=radius, so every qualifying pair shares >= 1 cell.
+    `skip_self` drops pairs of one object id (runSingle semantics,
+    tJoin/PointPointTJoinQuery.java:341-435).
+
+    Latest-per-pair (PointPointTJoinQuery.java:133-177): max over
+    struct(pair_ts, l.seq, r.seq, *payload) — max(struct) breaks ties field
+    by field, so the field order is part of the answer. Output: ws, l.id,
+    r.id, the `emit` struct fields (default: payload), pair_ts.
     """
-    l = _replicate_to_neighbor_cells(left_ws, grid, radius).select(
-        F.col("ws"),
-        F.col("cell"),
-        F.col("doc_id").alias("left_doc"),
-        F.col("seq_no").alias("left_seq"),
-        F.col("n_tok").alias("left_n_tok"),
-        F.col("ts_s").alias("left_ts"),
-    )
-    r = with_cell(right_ws, grid).select(
-        F.col("ws").alias("r_ws"),
-        F.col("cell").alias("r_cell"),
-        F.col("doc_id").alias("right_doc"),
-        F.col("seq_no").alias("right_seq"),
-        F.col("n_tok").alias("right_n_tok"),
-        F.col("ts_s").alias("right_ts"),
-    )
-    cond = (
-        (l.cell == r.r_cell)
-        & (l.ws == r.r_ws)
-        & (F.abs(l.left_n_tok - r.right_n_tok) <= radius)
-    )
-    if self_join:
-        # runSingle semantics: skip identical object ids
-        # (tJoin/PointPointTJoinQuery.java:341-435)
-        cond = cond & (l.left_doc != r.right_doc)
-    pairs = l.join(r, cond).select(
-        "ws",
-        "left_doc",
-        "right_doc",
-        "left_seq",
-        "right_seq",
-        F.abs(F.col("left_n_tok") - F.col("right_n_tok")).alias("dist"),
-        F.greatest("left_ts", "right_ts").alias("pair_ts"),
-    )
-    # latest-per-pair dedup (PointPointTJoinQuery.java:133-177): keep the
-    # max-(pair_ts, left_seq, right_seq) match per (ws, left_doc, right_doc).
-    # max_by over a struct = single shuffle, partial+final automatic.
-    latest = pairs.groupBy("ws", "left_doc", "right_doc").agg(
-        F.max(F.struct("pair_ts", "left_seq", "right_seq", "dist")).alias("_m")
+    pairs = left.df.join(right.df, ["ws", "cell"])
+    if skip_self:
+        pairs = pairs.where(F.col(left.id) != F.col(right.id))
+    pairs = pairs.withColumn("dist", F.expr(dist)).where(F.col("dist") <= radius)
+    # max over a struct: single shuffle, partial+final aggregate automatic
+    latest = pairs.groupBy("ws", left.id, right.id).agg(
+        F.max(
+            F.struct(
+                F.greatest(left.ts, right.ts).alias("pair_ts"),
+                left.seq,
+                right.seq,
+                *payload,
+            )
+        ).alias("_m")
     )
     return latest.select(
         "ws",
-        "left_doc",
-        "right_doc",
-        F.col("_m.left_seq").alias("left_seq"),
-        F.col("_m.right_seq").alias("right_seq"),
-        F.col("_m.dist").alias("dist"),
+        left.id,
+        right.id,
+        *[F.col(f"_m.{c}").alias(c) for c in (emit or payload)],
         F.col("_m.pair_ts").alias("pair_ts"),
     )

@@ -15,9 +15,11 @@ parallelism-1 merge is the anti-pattern at scale — our final stage only sees
 <= num_cells * k rows per window, so the merge input is tiny by construction;
 the prefix-sum/min-heap candidate cut happens in stage 1's rank).
 
-Tie-break is the deterministic total order (dist, doc_id, seq_no) — the
+Tie-break is the deterministic total order (dist, object id, seq) — the
 reference's PriorityQueue tie behavior is arbitrary; the oracle fixes it
-(SURVEY.md §7 risk register).
+(SURVEY.md §7 risk register). One implementation serves every geometry
+type: the spec (operators/geometry.py) supplies the candidates' distance and
+the object's id/seq columns.
 """
 
 from __future__ import annotations
@@ -29,78 +31,87 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from spatialflink_spark.config import GridConfig, QueryPoint
-from spatialflink_spark.operators.range_query import range_query
+from spatialflink_spark.operators.cells import cell_sql, with_cell
+from spatialflink_spark.operators.geometry import GeometrySpec
+from spatialflink_spark.operators.points import POINT
+from spatialflink_spark.operators.range_query import candidates
+
+
+def _top_k(df: DataFrame, by: tuple[str, ...], id_col: str, rank_col: str) -> DataFrame:
+    """Keep the k best rows per `by` group by (_m.dist, id) — the one
+    rank-and-cut both stages and the unbounded forms share. Tie-break on the
+    object id makes the order total (ids are unique per group here)."""
+    w = Window.partitionBy(*by).orderBy(F.col("_m.dist"), F.col(id_col))
+    return df.withColumn(rank_col, F.row_number().over(w).cast("int")).where(
+        F.col(rank_col) <= F.col("k")
+    )
+
+
+def _ranked(df: DataFrame, id_col: str, seq_col: str) -> DataFrame:
+    """Final rank cut per (ws, q_id): ws, q_id, rank, <id>, <seq>, dist."""
+    return _top_k(df, ("ws", "q_id"), id_col, "rank").select(
+        "ws", "q_id", "rank", id_col,
+        F.col(f"_m.{seq_col}").alias(seq_col),
+        F.col("_m.dist").alias("dist"),
+    )
+
+
+def knn_merge(partial: DataFrame, id_col: str = "doc_id", seq_col: str = "seq_no") -> DataFrame:
+    """Stage 2, the global merge per (ws, q_id): dedup per object keeping
+    its min (dist, seq) (KNNQuery.java:226-238), then re-rank and cut to k.
+
+    `partial` carries ws, q_id, k, the object id and `_m` =
+    struct(dist, seq) — at most cells x k rows per (ws, q_id) when it comes
+    from stage 1 or from the streaming per-cell heap. ONE exchange: hash-
+    partitioning on (ws, q_id) satisfies both the per-object groupBy (its
+    keys are a superset) and the final rank window."""
+    per_obj = (
+        partial.repartition("ws", "q_id")
+        .groupBy("ws", "q_id", "k", id_col)
+        .agg(F.min("_m").alias("_m"))
+    )
+    return _ranked(per_obj, id_col, seq_col)
 
 
 def knn_windowed(
-    seq_with_ws: DataFrame,
+    seq_ws: DataFrame,
     grid: GridConfig,
     qs: Iterable[QueryPoint],
+    spec: GeometrySpec = POINT,
 ) -> DataFrame:
-    """Top-k nearest rows (by |n_tok - q_n_tok|) per (window, query).
+    """Top-k nearest objects (by the spec's distance) per (window, query).
 
-    `seq_with_ws` must already carry a `ws` window-start column (compose with
-    functions/windows.py). Returns (ws, q_id, rank, doc_id, seq_no, dist).
+    `seq_ws` must already carry a `ws` window-start column (compose with
+    functions/windows.py). Returns (ws, q_id, rank, <id>, <seq>, dist).
     """
     # stage 0: radius-bounded candidate generation via the grid (d <= r bound,
     # PointPointKNNQuery.java:150-155). k > survivors => return-all
     # (README.md:161 semantics) falls out naturally.
-    cand = range_query(seq_with_ws, grid, qs)
+    cand = candidates(seq_ws, grid, qs, spec)
 
-    # stage 1: per-cell partial top-k. First dedup per doc WITHIN the cell
-    # (keep its min (dist, seq_no) row), THEN cut to the k best docs per cell.
-    # Deduping before the cut is what makes the two-stage result provably
-    # equal to global dedup-then-rank: a doc in the global top-k has fewer
-    # than k docs beating it in its own cell, so it survives the cut. (The
-    # reference cuts raw points per cell, KNNQuery.java:204-308 — a hot doc
-    # there can evict a qualifying doc; our oracle defines truth, SURVEY §7.)
-    # This is the map-side combine: the final stage input is bounded by
-    # num_cells * k rows per (ws, q_id) regardless of data volume.
+    # stage 1: per-cell partial top-k. First dedup per object WITHIN the cell
+    # (keep its min (dist, seq) row), THEN cut to the k best objects per
+    # cell. Deduping before the cut is what makes the two-stage result
+    # provably equal to global dedup-then-rank: an object in the global
+    # top-k has fewer than k objects beating it in its own cell, so it
+    # survives the cut. (The reference cuts raw points per cell,
+    # KNNQuery.java:204-308 — a hot doc there can evict a qualifying doc;
+    # our oracle defines truth, SURVEY §7.) This is the map-side combine:
+    # the final stage input is bounded by num_cells * k rows per (ws, q_id)
+    # regardless of data volume.
     # ONE exchange for stage 1 (guide §2.4 — operations keyed the same way
     # share an exchange): hash-partitioning on (ws, q_id, cell) satisfies
-    # the clustering of BOTH the finer per-doc groupBy (its keys are a
+    # the clustering of BOTH the finer per-object groupBy (its keys are a
     # superset) and the per-cell rank window, so neither plans its own
     # shuffle. The per-task slice stays one cell's candidates — the bounded
     # sort the two-stage design promises at scale.
-    cell_doc_min = (
+    cell_min = (
         cand.repartition("ws", "q_id", "cell")
-        .groupBy("ws", "q_id", "k", "cell", "doc_id")
-        .agg(F.min(F.struct("dist", "seq_no")).alias("_m"))
+        .groupBy("ws", "q_id", "k", "cell", spec.id)
+        .agg(F.min(F.struct("dist", spec.seq)).alias("_m"))
     )
-    w_cell = Window.partitionBy("ws", "q_id", "cell").orderBy(
-        F.col("_m.dist"), F.col("doc_id")
-    )
-    partial = (
-        cell_doc_min.withColumn("_r", F.row_number().over(w_cell))
-        .where(F.col("_r") <= F.col("k"))
-        .drop("_r")
-    )
-
-    # stage 2: global merge per (ws, q_id): dedup per doc_id keep min dist
-    # (KNNQuery.java:226-238), then re-rank and cut to k. Same single-
-    # exchange trick: partition once on (ws, q_id), the groupBy and the
-    # final rank window both reuse it; input is already <= cells * k rows
-    # per (ws, q_id).
-    per_doc = partial.repartition("ws", "q_id").groupBy(
-        "ws", "q_id", "k", "doc_id"
-    ).agg(
-        F.min("_m").alias("_m2")
-    ).select(
-        "ws", "q_id", "k", "doc_id",
-        F.col("_m2.dist").alias("dist"),
-        F.col("_m2.seq_no").alias("seq_no"),
-    )
-    w_final = Window.partitionBy("ws", "q_id").orderBy("dist", "doc_id")
-    return (
-        per_doc.withColumn("rank", F.row_number().over(w_final))
-        .where(F.col("rank") <= F.col("k"))
-        .select("ws", "q_id", "rank", "doc_id", "seq_no", "dist")
-    )
-
-
-def knn_windowed_qdf(seq_with_ws: DataFrame, grid: GridConfig, qs) -> DataFrame:
-    """Convenience alias mirroring the reference's run() naming."""
-    return knn_windowed(seq_with_ws, grid, qs)
+    partial = _top_k(cell_min, ("ws", "q_id", "cell"), spec.id, "_r").drop("_r")
+    return knn_merge(partial, spec.id, spec.seq)
 
 
 def knn_unbounded(seq_with_ws: DataFrame, grid: GridConfig, qs) -> DataFrame:
@@ -108,28 +119,17 @@ def knn_unbounded(seq_with_ws: DataFrame, grid: GridConfig, qs) -> DataFrame:
     query. The production form is knn_unbounded_pruned below; this one exists
     as its recall/answer oracle shape and is bench-excluded by design.
     Output shape matches knn_windowed."""
-    from pyspark.sql import functions as F2
-
     spark = seq_with_ws.sparkSession
     qdf = spark.createDataFrame(
         [(q.q_id, q.q_n_tok, q.k) for q in qs], "q_id string, q_n_tok int, k int"
     )
-    cand = seq_with_ws.join(F2.broadcast(qdf)).withColumn(
-        "dist", F2.expr("abs(n_tok - q_n_tok)")
+    cand = seq_with_ws.join(F.broadcast(qdf)).withColumn(
+        "dist", F.expr("abs(n_tok - q_n_tok)")
     )
     per_doc = cand.groupBy("ws", "q_id", "k", "doc_id").agg(
-        F2.min(F2.struct("dist", "seq_no")).alias("_m")
+        F.min(F.struct("dist", "seq_no")).alias("_m")
     )
-    w = Window.partitionBy("ws", "q_id").orderBy(F2.col("_m.dist"), F2.col("doc_id"))
-    return (
-        per_doc.withColumn("rank", F2.row_number().over(w).cast("int"))
-        .where(F2.col("rank") <= F2.col("k"))
-        .select(
-            "ws", "q_id", "rank", "doc_id",
-            F2.col("_m.seq_no").alias("seq_no"),
-            F2.col("_m.dist").alias("dist"),
-        )
-    )
+    return _ranked(per_doc, "doc_id", "seq_no")
 
 
 def knn_unbounded_pruned(
@@ -163,8 +163,6 @@ def knn_unbounded_pruned(
 
     Output shape matches knn_unbounded: ws, q_id, rank, doc_id, seq_no, dist.
     """
-    from spatialflink_spark.operators.cells import with_cell
-
     spark = seq_with_ws.sparkSession
     cl = grid.cell_len
     s = with_cell(seq_with_ws, grid).select(
@@ -221,14 +219,8 @@ def knn_unbounded_pruned(
                     # are absorbed by cell_of's clamp — otherwise the range
                     # is empty and the (ws, q_id) group silently vanishes
                     # instead of matching the knn_unbounded golden
-                    F.expr(
-                        f"cast(least(greatest(floor((q_n_tok - r) / {cl}), 0), "
-                        f"{grid.num_cells - 1}) as int)"
-                    ),
-                    F.expr(
-                        f"cast(least(floor((q_n_tok + r) / {cl}), "
-                        f"{grid.num_cells - 1}) as int)"
-                    ),
+                    F.expr(cell_sql(grid, "q_n_tok - r")),
+                    F.expr(cell_sql(grid, "q_n_tok + r")),
                 )
                 & (F.expr("abs(n_tok - q_n_tok)") <= F.col("r"))
             )
@@ -269,21 +261,10 @@ def knn_unbounded_pruned(
         merged = parts[0]
         for p in parts[1:]:
             merged = merged.unionByName(p)
-        w_final = Window.partitionBy("ws", "q_id").orderBy(
-            F.col("_m.dist"), F.col("doc_id")
-        )
         # every part is already materialized (the lazy localCheckpoint was
         # computed by its round's convergence count), so the final rank cut
         # reads from the checkpoints — s can be unpersisted without the
         # returned plan ever touching it again
-        return (
-            merged.withColumn("rank", F.row_number().over(w_final).cast("int"))
-            .where(F.col("rank") <= F.col("k"))
-            .select(
-                "ws", "q_id", "rank", "doc_id",
-                F.col("_m.seq_no").alias("seq_no"),
-                F.col("_m.dist").alias("dist"),
-            )
-        )
+        return _ranked(merged, "doc_id", "seq_no")
     finally:
         s.unpersist()

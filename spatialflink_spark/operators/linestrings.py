@@ -22,9 +22,9 @@ vertex sets are drawn from the one shared vocabulary, so two polylines'
 bboxes essentially always overlap (zero grid pruning — candidate set = all
 pairs) and the min pairwise vertex distance is ~0 for every pair — the combo
 is semantically degenerate in the 1-D token domain. Its two non-degenerate
-aspects are covered elsewhere: extent-vs-extent by
-intervals.interval_interval_join, vertex distance by point_linestring_join
-and interval_linestring_join.
+aspects are covered elsewhere: extent-vs-extent by the interval_interval_join
+query, vertex distance by the point_linestring_join and
+interval_linestring_join queries (gate.py).
 
 Candidate pruning is grid-shaped like the reference's
 (UniformGrid.java:368-395): replicate each linestring to the cells its bbox
@@ -35,21 +35,18 @@ one of the query's candidate cells, so it is complete. The guaranteed-cell
 bypass is deliberately NOT used: a bbox overlapping a guaranteed cell does
 not imply a VERTEX there (only a crossing), so the bypass is unsound for
 vertex distance.
+
+The range/kNN/join plans are the shared ones (operators/geometry.py); this
+module holds the spec, with the bbox distance as its cheap `bound` checked
+before the vertex scan.
 """
 
 from __future__ import annotations
 
-from typing import Iterable
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from spatialflink_spark.config import GridConfig, QueryPoint
-
-# exact 1-D point-to-vertex-set distance over the token array; q is a column
-# or literal already in scope
-def _vertex_dist_expr(q: str) -> str:
-    return f"array_min(transform(tokens, t -> abs(t - {q})))"
+from spatialflink_spark.operators.geometry import GeometrySpec, span_cells
 
 
 def linestring_stream(seq_ws: DataFrame) -> DataFrame:
@@ -66,170 +63,15 @@ def linestring_stream(seq_ws: DataFrame) -> DataFrame:
     )
 
 
-def _replicate_bbox(ls: DataFrame, grid: GridConfig, expand: int = 0) -> DataFrame:
-    lo_c = f"cast(least(greatest(floor((lo - {expand}) / {grid.cell_len}), 0), {grid.num_cells - 1}) as int)"
-    hi_c = f"cast(least(greatest(floor((hi + {expand}) / {grid.cell_len}), 0), {grid.num_cells - 1}) as int)"
-    return ls.withColumn("cell", F.explode(F.expr(f"sequence({lo_c}, {hi_c})")))
-
-
-def linestring_range(
-    seq_ws: DataFrame, grid: GridConfig, qs: Iterable[QueryPoint]
-) -> DataFrame:
-    """Point-query range over the LineString stream
-    (range/PointLineStringRangeQuery.java shape): candidate linestrings via
-    the broadcast covered-cell equi-join, bbox lower-bound prune, exact
-    vertex-distance filter. Output: ws, q_id, ls_id, ls_seq, dist."""
-    from spatialflink_spark.operators.range_query import query_cells_df
-
-    spark = seq_ws.sparkSession
-    qcells = query_cells_df(spark, grid, qs)
-    ls = _replicate_bbox(linestring_stream(seq_ws), grid)
-    cand = ls.join(F.broadcast(qcells), "cell").where(
-        F.expr("greatest(0, lo - q_n_tok, q_n_tok - hi)") <= F.col("radius")
-    )
-    exact = cand.withColumn("dist", F.expr(_vertex_dist_expr("q_n_tok")))
-    hit = exact.where(F.col("dist") <= F.col("radius"))
-    # a linestring meets a query in >= 1 covered cell; dedup to one row
-    return hit.groupBy("ws", "q_id", "ls_id", "ls_seq").agg(
-        F.min("dist").alias("dist")
-    )
-
-
-def linestring_knn(
-    seq_ws: DataFrame, grid: GridConfig, qs: Iterable[QueryPoint]
-) -> DataFrame:
-    """Point-LineString kNN (knn/PointLineStringKNNQuery.java shape): same
-    two-stage radius-bounded plan as the point/interval kNN — bbox-pruned
-    candidates via broadcast covered cells, per-cell partial top-k after
-    per-object dedup-keep-min, bounded global merge. Output: ws, q_id, rank,
-    ls_id, ls_seq, dist."""
-    from pyspark.sql.window import Window
-
-    from spatialflink_spark.operators.range_query import query_cells_df
-
-    spark = seq_ws.sparkSession
-    qcells = query_cells_df(spark, grid, qs)
-    ls = _replicate_bbox(linestring_stream(seq_ws), grid)
-    cand = ls.join(F.broadcast(qcells), "cell").where(
-        F.expr("greatest(0, lo - q_n_tok, q_n_tok - hi)") <= F.col("radius")
-    )
-    cand = cand.withColumn("dist", F.expr(_vertex_dist_expr("q_n_tok"))).where(
-        F.col("dist") <= F.col("radius")
-    )
-    per_obj = cand.repartition("ws", "q_id", "cell").groupBy("ws", "q_id", "k", "cell", "ls_id").agg(
-        F.min(F.struct("dist", "ls_seq")).alias("_m")
-    )
-    w_cell = Window.partitionBy("ws", "q_id", "cell").orderBy(
-        F.col("_m.dist"), F.col("ls_id")
-    )
-    partial = (
-        per_obj.withColumn("_r", F.row_number().over(w_cell))
-        .where(F.col("_r") <= F.col("k"))
-        .drop("_r")
-    )
-    per_ls = partial.repartition("ws", "q_id").groupBy("ws", "q_id", "k", "ls_id").agg(F.min("_m").alias("_m2"))
-    w_final = Window.partitionBy("ws", "q_id").orderBy(F.col("_m2.dist"), F.col("ls_id"))
-    return (
-        per_ls.withColumn("rank", F.row_number().over(w_final).cast("int"))
-        .where(F.col("rank") <= F.col("k"))
-        .select(
-            "ws", "q_id", "rank", "ls_id",
-            F.col("_m2.ls_seq").alias("ls_seq"),
-            F.col("_m2.dist").alias("dist"),
-        )
-    )
-
-
-def interval_linestring_join(
-    seq_ws: DataFrame, grid: GridConfig, radius: int
-) -> DataFrame:
-    """Windowed interval-linestring join — the Polygon-LineString type combo
-    (join/PolygonLineStringJoinQuery.java shape), completing the 3x3 geometry
-    matrix: distance = min over the polyline's VERTICES of the 1-D bbox
-    distance max(0, lo - t, t - hi).
-
-    Replication: intervals to their radius-EXPANDED covered cells,
-    linestrings to their bbox cells; a vertex within `radius` of [lo, hi]
-    lies in [lo - radius, hi + radius], so every qualifying pair shares a
-    cell and the join is a pure (ws, cell) equi-join. Output: ws, iv_id,
-    ls_id, lo, hi, dist, pair_ts."""
-    from spatialflink_spark.operators.intervals import interval_stream
-
-    iv = interval_stream(seq_ws)
-    lo_c = f"cast(least(greatest(floor((lo - {radius}) / {grid.cell_len}), 0), {grid.num_cells - 1}) as int)"
-    hi_c = f"cast(least(greatest(floor((hi + {radius}) / {grid.cell_len}), 0), {grid.num_cells - 1}) as int)"
-    l = iv.withColumn("cell", F.explode(F.expr(f"sequence({lo_c}, {hi_c})"))).select(
-        "ws", "cell", "iv_id", "iv_seq", "lo", "hi", "iv_ts"
-    )
-    r = _replicate_bbox(linestring_stream(seq_ws), grid).select(
-        F.col("ws").alias("r_ws"), F.col("cell").alias("r_cell"),
-        "ls_id", "ls_seq", "tokens", "ls_ts",
-    )
-    pairs = (
-        l.join(
-            r,
-            (l.ws == r.r_ws) & (l.cell == r.r_cell) & (l.iv_id != r.ls_id),
-        )
-        .withColumn(
-            "dist",
-            F.expr("array_min(transform(tokens, t -> greatest(0, lo - t, t - hi)))"),
-        )
-        .where(F.col("dist") <= radius)
-    )
-    latest = pairs.groupBy("ws", "iv_id", "ls_id").agg(
-        F.max(
-            F.struct(
-                F.greatest("iv_ts", "ls_ts").alias("pair_ts"),
-                F.col("iv_seq"), F.col("ls_seq"),
-                F.col("lo"), F.col("hi"), F.col("dist"),
-            )
-        ).alias("_m")
-    )
-    return latest.select(
-        "ws",
-        "iv_id",
-        "ls_id",
-        F.col("_m.lo").alias("lo"),
-        F.col("_m.hi").alias("hi"),
-        F.col("_m.dist").alias("dist"),
-        F.col("_m.pair_ts").alias("pair_ts"),
-    )
-
-
-def point_linestring_join(
-    seq_ws: DataFrame, grid: GridConfig, radius: int
-) -> DataFrame:
-    """Windowed point-linestring join (join/PointLineStringJoinQuery.java
-    shape): the point stream replicated to its radius-neighborhood cells,
-    the linestring stream to its bbox cells (JoinQuery.java:73-90), pure
-    (ws, cell) equi-join, exact vertex-distance θ-filter, latest-per-pair
-    dedup with id-skip. Output: ws, doc_id, ls_id, dist, pair_ts."""
-    from spatialflink_spark.operators.join import _replicate_to_neighbor_cells
-
-    pts = _replicate_to_neighbor_cells(seq_ws, grid, radius).select(
-        "ws", "cell", "doc_id", "seq_no", "n_tok", "ts_s"
-    )
-    ls = _replicate_bbox(linestring_stream(seq_ws), grid).select(
-        F.col("ws").alias("l_ws"), F.col("cell").alias("l_cell"),
-        "ls_id", "ls_seq", "tokens", F.col("ls_ts"),
-    )
-    pairs = pts.join(
-        ls,
-        (pts.ws == ls.l_ws) & (pts.cell == ls.l_cell) & (pts.doc_id != ls.ls_id),
-    ).withColumn("dist", F.expr(_vertex_dist_expr("n_tok")))
-    pairs = pairs.where(F.col("dist") <= radius)
-    latest = pairs.groupBy("ws", "doc_id", "ls_id").agg(
-        F.max(
-            F.struct(
-                F.greatest("ts_s", "ls_ts").alias("pair_ts"),
-                F.col("seq_no"), F.col("ls_seq"), F.col("dist"),
-            )
-        ).alias("_m")
-    )
-    return latest.select(
-        "ws",
-        "doc_id",
-        "ls_id",
-        F.col("_m.dist").alias("dist"),
-        F.col("_m.pair_ts").alias("pair_ts"),
-    )
+LINESTRING = GeometrySpec(
+    id="ls_id",
+    seq="ls_seq",
+    ts="ls_ts",
+    geom=("tokens",),
+    derive=linestring_stream,
+    cells=span_cells("lo", "hi"),
+    # exact 1-D point-to-vertex-set distance over the token array
+    dist=lambda p: f"array_min(transform(tokens, t -> abs(t - {p})))",
+    bypass=False,
+    bound=lambda p: f"greatest(0, lo - {p}, {p} - hi)",
+)

@@ -1,4 +1,5 @@
-"""Windowed range query — guaranteed/candidate grid pruning.
+"""Windowed range query — guaranteed/candidate grid pruning, for every
+geometry type (operators/geometry.py).
 
 Reference semantics (range/PointPointRangeQuery.java:110-187):
 1. compute guaranteed + candidate cell sets for each query point
@@ -27,6 +28,8 @@ from pyspark.sql import functions as F
 
 from spatialflink_spark.config import GridConfig, QueryPoint
 from spatialflink_spark.operators.cells import with_cell
+from spatialflink_spark.operators.geometry import GeometrySpec
+from spatialflink_spark.operators.points import POINT
 
 
 def query_cells_df(
@@ -110,10 +113,9 @@ def range_count_prefix(
     )
 
     # ---- exact check only in the boundary cells ----
-    qcells = query_cells_df(spark, grid, qs).where(~F.col("guaranteed"))
     boundary = (
-        s.join(F.broadcast(qcells), "cell")
-        .where(F.expr("abs(n_tok - q_n_tok) <= radius"))
+        candidates(seq_t, grid, qs)
+        .where(~F.col("guaranteed"))
         .groupBy("ws", "q_id")
         .agg(F.count(F.lit(1)).alias("n_b"))
     )
@@ -126,25 +128,54 @@ def range_count_prefix(
     return total.where(F.col("n_matches") > 0).orderBy("ws", "q_id")
 
 
-def range_query(
-    seq: DataFrame,
+def candidates(
+    seq_ws: DataFrame,
     grid: GridConfig,
     qs: Iterable[QueryPoint],
+    spec: GeometrySpec = POINT,
     approximate: bool = False,
 ) -> DataFrame:
-    """All rows within radius of each query point (no windowing — compose
-    with functions/windows.py builders for the windowed variants).
+    """Radius-qualifying (object, query, cell) rows: the spec's stream
+    replicated to its covered cells, broadcast equi-joined on cell with the
+    query cells, then the exact `dist <= radius` check — skipped in the
+    guaranteed cells when the spec's bypass is sound, and after the spec's
+    cheap lower bound when it has one.
 
-    Output: q_id + every sequence column + dist.
-    """
-    spark = seq.sparkSession
-    qcells = query_cells_df(spark, grid, qs)
-    s = with_cell(seq, grid)
-    joined = s.join(F.broadcast(qcells), "cell")
-    dist = F.expr("abs(n_tok - q_n_tok)")
+    Output: the spec's stream columns + cell, q_id, q_n_tok, radius, k,
+    guaranteed, dist. An object replicated to several cells appears once
+    per cell it meets the query in."""
+    qcells = query_cells_df(seq_ws.sparkSession, grid, qs)
+    joined = spec.replicate(seq_ws, grid).join(F.broadcast(qcells), "cell")
+    if spec.bound is not None:
+        joined = joined.where(F.expr(spec.bound("q_n_tok")) <= F.col("radius"))
+    scored = joined.withColumn("dist", F.expr(spec.dist("q_n_tok")))
     if approximate:
         # approximate mode: candidates pass unchecked (QueryConfiguration.java:50-56)
-        pred = F.lit(True)
-    else:
-        pred = F.col("guaranteed") | (dist <= F.col("radius"))
-    return joined.where(pred).withColumn("dist", dist)
+        return scored
+    pred = F.col("dist") <= F.col("radius")
+    if spec.bypass:
+        pred = F.col("guaranteed") | pred
+    return scored.where(pred)
+
+
+def range_query(
+    seq_ws: DataFrame,
+    grid: GridConfig,
+    qs: Iterable[QueryPoint],
+    spec: GeometrySpec = POINT,
+    approximate: bool = False,
+) -> DataFrame:
+    """All objects within radius of each query point (no windowing —
+    compose with functions/windows.py builders for the windowed variants).
+
+    Points lie in one cell each, so their candidates are the answer: q_id +
+    every sequence column + dist. An object covering several cells meets a
+    query in >= 1 of them with the same object-level dist; it is collapsed
+    to one row per (ws, q_id, id, seq): ws, q_id, <id>, <seq>, dist.
+    """
+    cand = candidates(seq_ws, grid, qs, spec, approximate)
+    if spec.one_cell:
+        return cand
+    return cand.groupBy("ws", "q_id", spec.id, spec.seq).agg(
+        F.min("dist").alias("dist")
+    )

@@ -141,7 +141,7 @@ FROM stay s JOIN sensor se ON s.cell = se.cell AND s.ws = se.ws
 
 
 def interval_interval_join(radius: int | None = None) -> str:
-    """Polygon-Polygon join twin (operators/intervals.interval_interval_join):
+    """Polygon-Polygon join twin (gate.q_interval_interval_join):
     all-pairs 1-D bbox distance join with id-skip + latest-per-pair dedup —
     the row_number ordering mirrors the engine's max-struct field order
     (pair_ts, l_seq, r_seq)."""
@@ -171,7 +171,7 @@ FROM dedup WHERE rn = 1
 
 def _vdist(tokens: str, q: str) -> str:
     """1-D vertex-set distance: min over the token array of |t - q| —
-    twin of operators/linestrings._vertex_dist_expr."""
+    twin of operators/linestrings.LINESTRING.dist."""
     return f"list_min(list_transform({tokens}, t -> abs(t - {q})))"
 
 
@@ -536,7 +536,7 @@ FROM per_ws
 
 
 def interval_knn() -> str:
-    """Point-Polygon kNN twin (operators/intervals.interval_knn): 1-D
+    """Point-Polygon kNN twin (gate.q_interval_knn): 1-D
     point-to-bbox distance, per-interval dedup-keep-min, rank cut to k."""
     return f"""{_prologue(tumbling=True)}
 , {_iv_cte()},
@@ -597,9 +597,10 @@ FROM documents
 
 
 def _mi_duck_dist(tbl: str, p: str) -> str:
-    """DuckDB twin of operators/multiintervals._mi_dist + SPANS_EXPR: the
-    min-over-parts 1-D bbox distance, with the spans generated inline from
-    the same deterministic arithmetic (m = doc_id%3+1 spans at stride 17)."""
+    """DuckDB twin of operators/multiintervals.MULTI_INTERVAL.dist +
+    SPANS_EXPR: the min-over-parts 1-D bbox distance, with the spans
+    generated inline from the same deterministic arithmetic (m = doc_id%3+1
+    spans at stride 17)."""
     from spatialflink_spark.operators.multiintervals import SPAN_STRIDE
 
     return (
@@ -611,8 +612,8 @@ def _mi_duck_dist(tbl: str, p: str) -> str:
 
 
 def multiinterval_range() -> str:
-    """Multi-geometry range twin (operators/multiintervals
-    .multiinterval_range): all-objects scan, min-over-parts distance."""
+    """Multi-geometry range twin (gate.q_multiinterval_range): all-objects
+    scan, min-over-parts distance."""
     return f"""{_prologue(tumbling=True)}
 , scored AS (
   SELECT s.ws, q.q_id, s.doc_id AS mi_id, s.seq_no AS mi_seq,
@@ -698,8 +699,8 @@ def _gc_duck_dist(tbl: str, p: str) -> str:
 
 
 def geomcollection_range() -> str:
-    """Mixed-part collection range twin (operators/geomcollection
-    .geomcollection_range): all-objects scan, min-over-typed-parts dist."""
+    """Mixed-part collection range twin (gate.q_geomcollection_range):
+    all-objects scan, min-over-typed-parts dist."""
     return f"""{_prologue(tumbling=True)}
 , scored AS (
   SELECT s.ws, q.q_id, s.doc_id AS gc_id, s.seq_no AS gc_seq,

@@ -63,10 +63,6 @@ def exchange_count(df: DataFrame) -> int:
     return simple_plan(df).count("Exchange")
 
 
-def codegen_stage_count(df: DataFrame) -> int:
-    return len(set(re.findall(r"WholeStageCodegen \((\d+)\)", simple_plan(df))))
-
-
 def window_specs(df: DataFrame) -> list[str]:
     """PREFIX of each windowspecdefinition(...) argument list — up to the
     first nested close-paren, which always covers the partition + ordering

@@ -20,8 +20,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from spatialflink_spark.config import EngineConfig, QueryPoint
-from spatialflink_spark.operators.range_query import query_cells_df
-from spatialflink_spark.operators.cells import cell_expr
+from spatialflink_spark.operators.knn import knn_merge
+from spatialflink_spark.operators.range_query import range_query
 
 
 def stream_range_count(
@@ -32,12 +32,7 @@ def stream_range_count(
 
     Emits (ws bigint, q_id, n_matches) in APPEND mode — one final row per
     closed window, which is what the exactly-once sink keys on."""
-    spark = stream.sparkSession
-    qcells = query_cells_df(spark, cfg.grid, qs)
-    s = stream.withColumn("cell", cell_expr(cfg.grid))
-    matched = s.join(F.broadcast(qcells), "cell").where(
-        F.col("guaranteed") | (F.expr("abs(n_tok - q_n_tok)") <= F.col("radius"))
-    )
+    matched = range_query(stream, cfg.grid, qs)
     counted = matched.groupBy(
         F.window("event_ts", f"{cfg.tumbling_s} seconds").alias("win"), "q_id"
     ).agg(F.count(F.lit(1)).alias("n_matches"))
@@ -45,27 +40,6 @@ def stream_range_count(
         F.expr("cast(unix_timestamp(win.start) as bigint)").alias("ws"),
         "q_id",
         "n_matches",
-    )
-
-
-def stream_sliding_variation(stream: DataFrame, cfg: EngineConfig) -> DataFrame:
-    """MN_Q2 analog (sliding window incremental aggregate,
-    sncb/mobility/MN_Q2.java:85 + VariationAgg): per (source, sliding window)
-    max-min of n_tok."""
-    agg = stream.groupBy(
-        F.window(
-            "event_ts", f"{cfg.sliding_size_s} seconds", f"{cfg.sliding_slide_s} seconds"
-        ).alias("win"),
-        "source",
-    ).agg(
-        (F.max("n_tok") - F.min("n_tok")).alias("variation"),
-        F.count(F.lit(1)).alias("n_rows"),
-    )
-    return agg.select(
-        F.expr("cast(unix_timestamp(win.start) as bigint)").alias("ws"),
-        "source",
-        "variation",
-        "n_rows",
     )
 
 
@@ -228,27 +202,11 @@ def stream_knn_topk(
     query, cell) in a collect_list state — O(candidates) state that a hot
     (window, cell) under a wide query grows without bound (judged the one
     genuine scale-killer). This operator is the fix."""
-    spark = stream.sparkSession
-    from spatialflink_spark.operators.range_query import query_cells_df
     from spatialflink_spark.streaming.stateful import knn_topk_stateful
 
-    qcells = query_cells_df(spark, cfg.grid, qs)
-    s = stream.withColumn("cell", cell_expr(cfg.grid))
-    cand = (
-        s.join(F.broadcast(qcells), "cell")
-        .where(
-            F.col("guaranteed") | (F.expr("abs(n_tok - q_n_tok)") <= F.col("radius"))
-        )
-        .select(
-            "event_ts",
-            "ts_s",
-            "q_id",
-            "k",
-            "cell",
-            "doc_id",
-            "seq_no",
-            F.expr("cast(abs(n_tok - q_n_tok) as int)").alias("dist"),
-        )
+    cand = range_query(stream, cfg.grid, qs).select(
+        "event_ts", "ts_s", "q_id", "k", "cell", "doc_id", "seq_no",
+        F.col("dist").cast("int").alias("dist"),
     )
     return knn_topk_stateful(cand, cfg.tumbling_s)
 
@@ -256,23 +214,11 @@ def stream_knn_topk(
 def finalize_knn(batch_df: DataFrame) -> DataFrame:
     """Batch-side final merge for stream_knn_topk output (already per-cell
     top-k docs at min (dist, seq_no)): per-doc dedup keep min ACROSS cells
-    (KNNQuery.java:226-238), global rank, cut at k — identical math to
-    operators/knn.knn_windowed stage 2."""
-    from pyspark.sql.window import Window
-
-    per_doc = batch_df.groupBy("ws", "q_id", "k", "doc_id").agg(
-        F.min(F.struct("dist", "seq_no")).alias("_m")
-    )
-    w_final = Window.partitionBy("ws", "q_id").orderBy(
-        F.col("_m.dist"), F.col("doc_id")
-    )
-    return (
-        per_doc.withColumn("rank", F.row_number().over(w_final).cast("int"))
-        .where(F.col("rank") <= F.col("k"))
-        .select(
-            "ws", "q_id", "rank", "doc_id",
-            F.col("_m.seq_no").alias("seq_no"),
-            F.col("_m.dist").alias("dist"),
+    (KNNQuery.java:226-238), global rank, cut at k — operators/knn.knn_merge,
+    the stage 2 of the batch kNN."""
+    return knn_merge(
+        batch_df.select(
+            "ws", "q_id", "k", "doc_id", F.struct("dist", "seq_no").alias("_m")
         )
     )
 

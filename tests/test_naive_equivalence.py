@@ -5,10 +5,19 @@ operator output must equal a brute-force computation with no grid at all."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 from spatialflink_spark import gate
-from spatialflink_spark.config import DEFAULT_CONFIG as C, DEFAULT_QUERY_POINTS
+from spatialflink_spark.config import DEFAULT_CONFIG as C, DEFAULT_QUERY_POINTS, QueryPoint
+from spatialflink_spark.operators.geomcollection import GEOM_COLLECTION
+from spatialflink_spark.operators.intervals import INTERVAL
+from spatialflink_spark.operators.knn import knn_windowed
+from spatialflink_spark.operators.linestrings import LINESTRING
+from spatialflink_spark.operators.multiintervals import MULTI_INTERVAL
+from spatialflink_spark.operators.points import POINT
+from spatialflink_spark.operators.range_query import range_query
 from tests.conftest import SF_SMALL
 
 
@@ -16,22 +25,52 @@ def _pdf(df, keys):
     return df.toPandas().sort_values(keys).reset_index(drop=True)
 
 
-def test_range_pruned_equals_naive(spark):
-    pruned = gate.q_range_rows(spark, SF_SMALL).select(
-        "ws", "q_id", "doc_id", "seq_no", "dist"
-    )
-    seq = gate._seq_t(spark, SF_SMALL)
+GEOMETRIES = {
+    "point": POINT,
+    "interval": INTERVAL,
+    "linestring": LINESTRING,
+    "multiinterval": MULTI_INTERVAL,
+    "geomcollection": GEOM_COLLECTION,
+}
+
+# the gate's query set plus one query above the grid top (128: rows and
+# spans past it are clamped into the top cell) and one whose radius spans
+# more than two cells. q_span's guaranteed cells 13-14 lie inside most
+# linestring bboxes (vertices ~97 and ~10^4) without holding a vertex, so
+# it is the query that catches an unsound guaranteed-cell bypass.
+QUERIES = (
+    *DEFAULT_QUERY_POINTS,
+    QueryPoint("q_top", 150, 8, 5),
+    QueryPoint("q_span", 112, 12, 8),
+)
+
+
+def _naive(spark, seq_ws, spec):
+    """Every object against every query, the spec's distance, no grid."""
     qp = spark.createDataFrame(
-        [(q.q_id, q.q_n_tok, q.radius) for q in DEFAULT_QUERY_POINTS],
-        "q_id string, q_n_tok int, radius int",
+        [(q.q_id, q.q_n_tok, q.radius, q.k) for q in QUERIES],
+        "q_id string, q_n_tok int, radius int, k int",
     )
-    naive = (
-        seq.crossJoin(qp)
-        .where(F.expr("abs(n_tok - q_n_tok) <= radius"))
-        .select("ws", "q_id", "doc_id", "seq_no", F.expr("abs(n_tok - q_n_tok)").alias("dist"))
+    return (
+        spec.derive(seq_ws)
+        .crossJoin(qp)
+        .withColumn("dist", F.expr(spec.dist("q_n_tok")))
+        .where(F.col("dist") <= F.col("radius"))
     )
-    keys = ["ws", "q_id", "doc_id", "seq_no"]
-    a, b = _pdf(pruned, keys), _pdf(naive, keys)
+
+
+@pytest.mark.parametrize("geometry", list(GEOMETRIES))
+def test_range_pruned_equals_naive(spark, geometry):
+    """The linestring and collection cases fail if the guaranteed-cell
+    bypass is switched on for them: a bbox overlapping a guaranteed cell
+    does not put a vertex there."""
+    spec = GEOMETRIES[geometry]
+    seq = gate._seq_t(spark, SF_SMALL)
+    cols = ["ws", "q_id", spec.id, spec.seq, "dist"]
+    pruned = range_query(seq, C.grid, QUERIES, spec).select(*cols)
+    naive = _naive(spark, seq, spec).select(*cols)
+    a, b = _pdf(pruned, cols[:4]), _pdf(naive, cols[:4])
+    assert len(a) > 0
     assert a.equals(b[a.columns])
 
 
@@ -69,28 +108,24 @@ def test_join_pruned_equals_naive(spark):
     assert a.equals(b[a.columns])
 
 
-def test_knn_pruned_equals_naive(spark):
-    pruned = gate.q_knn_sliding(spark, SF_SMALL)
+@pytest.mark.parametrize("geometry", list(GEOMETRIES))
+def test_knn_pruned_equals_naive(spark, geometry):
+    spec = GEOMETRIES[geometry]
     seq = gate._seq_s(spark, SF_SMALL)
-    qp = spark.createDataFrame(
-        [(q.q_id, q.q_n_tok, q.radius, q.k) for q in DEFAULT_QUERY_POINTS],
-        "q_id string, q_n_tok int, radius int, k int",
+    pruned = knn_windowed(seq, C.grid, QUERIES, spec)
+    per_obj = _naive(spark, seq, spec).groupBy("ws", "q_id", "k", spec.id).agg(
+        F.min(F.struct("dist", spec.seq)).alias("_m")
     )
-    cand = seq.crossJoin(qp).where(F.expr("abs(n_tok - q_n_tok) <= radius"))
-    per_doc = cand.withColumn("dist", F.expr("abs(n_tok - q_n_tok)")).groupBy(
-        "ws", "q_id", "k", "doc_id"
-    ).agg(F.min(F.struct("dist", "seq_no")).alias("_m"))
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("ws", "q_id").orderBy(F.col("_m.dist"), F.col("doc_id"))
+    w = Window.partitionBy("ws", "q_id").orderBy(F.col("_m.dist"), F.col(spec.id))
     naive = (
-        per_doc.withColumn("rank", F.row_number().over(w).cast("int"))
+        per_obj.withColumn("rank", F.row_number().over(w).cast("int"))
         .where(F.col("rank") <= F.col("k"))
-        .select("ws", "q_id", "rank", "doc_id",
-                F.col("_m.seq_no").alias("seq_no"), F.col("_m.dist").alias("dist"))
+        .select("ws", "q_id", "rank", spec.id,
+                F.col(f"_m.{spec.seq}").alias(spec.seq), F.col("_m.dist").alias("dist"))
     )
     keys = ["ws", "q_id", "rank"]
     a, b = _pdf(pruned, keys), _pdf(naive, keys)
+    assert len(a) > 0
     assert a.equals(b[a.columns])
 
 

@@ -6,6 +6,9 @@ pushdown, a broadcast that became a shuffle, a final agg without its partial.
 
 from __future__ import annotations
 
+import re
+
+import pytest
 from pyspark.sql import functions as F
 
 from spatialflink_spark import gate, plans
@@ -577,3 +580,78 @@ def test_prototypicality_assignment_is_broadcast_argmin(spark):
     p = plans.simple_plan(df)
     assert "CartesianProduct" not in p, p
     assert "SortMergeJoin" not in p, p
+
+
+# Ceilings on the Exchange / Sort / Generate operator counts of the
+# geometry-kernel queries (range, kNN and join over every geometry type, and
+# their apps compositions) and of the streaming kNN's batch-side merge: the
+# counts of the per-type implementations the shared plans replaced, so no
+# plan may gain an operator. finalize_knn now plans (1, 2, 0). The r06
+# one-exchange-per-cut kNN fix is the 2 exchanges of the *_knn rows.
+PLAN_CEILING = {
+    "range_tumbling_count": (2, 1, 0),
+    "range_rows": (0, 0, 0),
+    "range_approx": (0, 0, 0),
+    "range_prefix_counts": (5, 3, 0),
+    "knn_sliding": (2, 4, 1),
+    "join_self_tumbling": (1, 2, 1),
+    "join_two_streams": (1, 2, 1),
+    "tknn_trajectories": (2, 4, 2),
+    "staytime_normalized": (4, 0, 1),
+    "interval_containment_join": (1, 2, 1),
+    "interval_range_count": (1, 0, 0),
+    "interval_interval_join": (1, 2, 2),
+    "interval_knn": (2, 4, 1),
+    "multiinterval_range": (1, 0, 1),
+    "multiinterval_join": (1, 2, 1),
+    "multiinterval_knn": (2, 4, 1),
+    "geomcollection_range": (1, 0, 1),
+    "geomcollection_join": (1, 2, 1),
+    "geomcollection_knn": (2, 4, 1),
+    "linestring_range": (1, 0, 1),
+    "linestring_knn": (2, 4, 1),
+    "point_linestring_join": (1, 2, 2),
+    "interval_linestring_join": (1, 2, 2),
+    "knn_unbounded": (2, 3, 0),
+    "knn_unbounded_pruned": (1, 1, 0),
+    "finalize_knn": (2, 3, 0),
+}
+
+
+def _node_counts(df) -> tuple[int, int, int]:
+    """(Exchange, Sort, Generate) operators in the physical plan, skipping
+    the plans printed inside a cached relation: their text depends on
+    whether the cache was already built (an executed adaptive plan prints
+    both its final and its initial form)."""
+    counts = {"Exchange": 0, "Sort": 0, "Generate": 0}
+    cached_depth = None
+    plan = plans.simple_plan(df).split("== Physical Plan ==")[-1]
+    for m in re.finditer(r"^([ :+|-]*)(\w+)", plan, re.M):
+        depth, name = len(m.group(1)), m.group(2)
+        if cached_depth is not None and depth > cached_depth:
+            continue
+        cached_depth = depth if name == "InMemoryRelation" else None
+        if name in counts:
+            counts[name] += 1
+    return counts["Exchange"], counts["Sort"], counts["Generate"]
+
+
+@pytest.mark.parametrize("name", sorted(PLAN_CEILING))
+def test_plan_shape_no_worse(spark, name):
+    if name == "finalize_knn":
+        # a static micro-batch of stream_knn_topk's output
+        from spatialflink_spark.streaming.pipeline import finalize_knn
+
+        batch = spark.createDataFrame(
+            [(0, "q", 2, 1, 7, 3, 5), (0, "q", 2, 2, 8, 0, 1)],
+            "ws bigint, q_id string, k int, cell int, doc_id bigint, "
+            "seq_no int, dist int",
+        )
+        df = finalize_knn(batch)
+    else:
+        df = getattr(gate, f"q_{name}")(spark, SF_SMALL)
+    got = _node_counts(df)
+    assert all(g <= c for g, c in zip(got, PLAN_CEILING[name])), (
+        f"{name}: (Exchange, Sort, Generate) {got} > {PLAN_CEILING[name]}\n"
+        + plans.simple_plan(df)
+    )
